@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from esa_pfa_spark.functions.time import epoch_s, ts_diff_us
+from esa_pfa_spark.operators.windows import next_non_null
 
 _TAG = "__asof_tag"
 _TS = "__asof_ts"
@@ -86,7 +87,8 @@ def asof_join(
     # may legitimately be null on its matched row (e.g. lead_1 of the last
     # observation), so filling columns independently with ignorenulls would
     # leak older values.  The struct is non-null exactly on obs rows, so
-    # last/first(struct, ignorenulls) selects the matched ROW atomically.
+    # the backward last(struct, ignorenulls) and the forward next-non-null
+    # struct select the matched ROW atomically.
     _PAY = "__asof_payload"
     obs_side = observations.select(
         *keys,
@@ -111,11 +113,10 @@ def asof_join(
         .orderBy(F.col(_TS).asc(), F.col(_TAG).asc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    w_fwd = (
-        Window.partitionBy(*keys)
-        .orderBy(F.col(_TS).asc(), F.col(_TAG).desc())
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    )
+    # probe tag 1 sorts before an equal-ts obs -> inclusive tie match; the
+    # forward fill is the row's own payload, else the next non-null one
+    w_fwd = Window.partitionBy(*keys).orderBy(F.col(_TS).asc(), F.col(_TAG).desc())
+    fwd = F.coalesce(F.col(_PAY), next_non_null(_PAY).over(w_fwd))
     tol_s = _tolerance_seconds(tolerance)
 
     if direction == "nearest":
@@ -124,7 +125,6 @@ def asof_join(
         # pick (a closer-but-out-of-tolerance side must not mask a valid
         # one); |dt| ties resolve to the backward match.
         back = F.last(_PAY, ignorenulls=True).over(w_back)
-        fwd = F.first(_PAY, ignorenulls=True).over(w_fwd)
         both = unioned.select(
             *keys,
             F.col(_TS),
@@ -167,7 +167,7 @@ def asof_join(
         if direction == "backward":
             fill = F.last(_PAY, ignorenulls=True).over(w_back)
         else:
-            fill = F.first(_PAY, ignorenulls=True).over(w_fwd)
+            fill = fwd
 
         filled = unioned.select(
             *keys,

@@ -160,6 +160,9 @@ def suffix_order(
     )
     pos = (
         df.select(F.col(id_col).alias("__d"), guarded.alias("__t1"))
+        # an empty document has no suffixes, and sequence(1, 0) would count
+        # DOWN to an invalid index 0: drop empty/null token arrays first
+        .filter(F.size("__t1") > 0)
         .select("__d", F.posexplode(packed).alias("off", "__key"))
         .localCheckpoint()  # consumed twice (counts + rank join): compute
         # the tokenize/pack/explode lineage once, not per consumer
@@ -370,7 +373,8 @@ def duplicate_coverage(
     rows per surviving pair -> classic sweep-line union per document
     (running-max window over a DOC-partitioned frame — never global) ->
     one row per document joined back so dup-free docs report 0.
-    Returns (id_col, n_tok, dup_tokens, dup_frac)."""
+    Returns (id_col, n_tok, dup_tokens, dup_frac); an empty document
+    reports n_tok = dup_tokens = 0 and dup_frac = 0."""
     pairs, src = _adjacent_lcp(
         df, tokens_col, id_col, n_partitions, max_token, fanout
     )
@@ -404,9 +408,15 @@ def duplicate_coverage(
             id_col,
             n_tok_col,
             F.coalesce("__dup", F.lit(0)).cast("long").alias("dup_tokens"),
-            F.round(
-                F.coalesce("__dup", F.lit(0)).cast("double") / F.col(n_tok_col),
-                round_to,
+            # an empty document (n_tok = 0) has nothing duplicated: 0, not 0/0
+            F.coalesce(
+                F.round(
+                    F.try_divide(
+                        F.coalesce("__dup", F.lit(0)).cast("double"), F.col(n_tok_col)
+                    ),
+                    round_to,
+                ),
+                F.lit(0.0),
             ).alias("dup_frac"),
         )
     )

@@ -2106,12 +2106,10 @@ def pack_attention_stats(
             "chunk_id",
             "n_docs",
             "n_tok",
-            (
-                (F.col("n_tok") * (F.col("n_tok") + 1) - F.col("__2w")) / 2
-            ).cast("long").alias("cross_pairs"),
-            (F.col("n_tok") * (F.col("n_tok") + 1) / 2).cast("long").alias(
-                "total_pairs"
-            ),
+            # integer div on longs (both numerators are even): a double
+            # quotient would round once T(T+1) exceeds 2^53
+            F.expr("(n_tok * (n_tok + 1) - __2w) div 2").alias("cross_pairs"),
+            F.expr("(n_tok * (n_tok + 1)) div 2").alias("total_pairs"),
             F.round(
                 (F.col("n_tok") * (F.col("n_tok") + 1) - F.col("__2w"))
                 .cast("double")

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import datetime as _dt
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from esa_pfa_spark.functions.time import ts_diff_us
@@ -35,12 +35,24 @@ def ffill(df: DataFrame, cols: list[str], key: str, ts: str) -> DataFrame:
     )
 
 
+def next_non_null(col: str) -> Column:
+    """``lead(col, 1) IGNORE NULLS``: the first non-null value of ``col``
+    strictly after the current row; apply ``.over(w)`` with an ordered,
+    frameless window.  Spark evaluates it with a streaming offset frame,
+    linear per partition, whereas ``first(col, ignorenulls)`` over a
+    ``(1, unboundedFollowing)`` row frame re-aggregates the rest of the
+    partition for every row (quadratic in a hot key).  PySpark's
+    ``F.lead`` takes no ignore-nulls flag, hence the SQL form over a
+    named column."""
+    return F.expr(f"lead(`{col.replace('`', '``')}`, 1) IGNORE NULLS")
+
+
 def bfill(df: DataFrame, cols: list[str], key: str, ts: str) -> DataFrame:
     """Backward-fill: earliest non-null value at or after each row."""
-    w = Window.partitionBy(key).orderBy(ts).rowsBetween(0, Window.unboundedFollowing)
+    w = Window.partitionBy(key).orderBy(ts)
     return df.select(
         *[c for c in df.columns if c not in cols],
-        *[F.first(c, ignorenulls=True).over(w).alias(c) for c in cols],
+        *[F.coalesce(F.col(c), next_non_null(c).over(w)).alias(c) for c in cols],
     )
 
 

@@ -47,7 +47,12 @@ def oracle_asof_backward(
     """Backward as-of with tolerance, explicit per-probe scan (O(n*m) per
     entity — oracle clarity over speed)."""
     tol_s = tolerance.total_seconds()
-    by_entity = {k: g.sort_values("ts").reset_index(drop=True) for k, g in enriched.groupby("entity_id")}
+    # stable sort: among tied observation timestamps the LAST row in the
+    # enriched (timeline) order is the match, as in the union+window plan
+    by_entity = {
+        k: g.sort_values("ts", kind="mergesort").reset_index(drop=True)
+        for k, g in enriched.groupby("entity_id")
+    }
     rows = []
     for _, pr in probes.iterrows():
         ent, qts = pr["entity_id"], pr["query_ts"]

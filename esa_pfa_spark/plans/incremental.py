@@ -35,7 +35,8 @@ most — a normal bucketed table), the delta scan partition-prunes on the
 dated lakehouse layout, and the fill is the same one-Exchange union +
 window plan as ``plans.pipeline._fused_fill`` with three extra
 ignorenulls carry-forward fills over the SAME sort — no additional
-exchange, no additional sort.
+exchange, no additional sort.  Forward lookups (lead value, session
+end) are linear ``lead(x, 1) IGNORE NULLS`` offset frames.
 
 Reference analog: the resumable session state of
 pfa-database/.../classifier/ClassifierModel.java:36-164 (persisted
@@ -49,6 +50,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from esa_pfa_spark.functions.time import ts_diff_us
+from esa_pfa_spark.operators.windows import next_non_null
 from esa_pfa_spark.plans.pipeline import DEFAULT_SESSION_GAP, DEFAULT_TOLERANCE
 
 STATE_COLS = [
@@ -213,7 +215,10 @@ def incremental_fill(
     Plan: tagged union (obs=0, probe=1, state carry-in=2) -> ONE exchange
     on the entity -> the same in-partition window sorts as the fused
     plan, with three extra ignorenulls fills that ride the existing sort
-    (state counters forward-filled from the carry-in row).  The carry-in
+    (state counters forward-filled from the carry-in row).  ``lead_1_<value>``
+    and the session end behind ``session_len`` are ``lead(x, 1) IGNORE
+    NULLS`` over helper columns — streaming offset frames, linear per
+    entity, never a quadratic ``(1, unboundedFollowing)`` frame.  The carry-in
     can never be an in-tolerance match (its ts < cut <= probe_ts - tol),
     so its partial payload never surfaces."""
     payload = payload or []
@@ -262,9 +267,7 @@ def incremental_fill(
     w_prev = Window.partitionBy("__e").orderBy(*order).rowsBetween(
         Window.unboundedPreceding, -1
     )
-    w_next = Window.partitionBy("__e").orderBy(*order).rowsBetween(
-        1, Window.unboundedFollowing
-    )
+    w_ord = Window.partitionBy("__e").orderBy(*order)
     w_cum = Window.partitionBy("__e").orderBy(*order).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
@@ -299,10 +302,8 @@ def incremental_fill(
     # first so it can never supply a forward value, and a matched (always
     # loaded) row's next observation is loaded or absent at this horizon —
     # exactly the full plan's lead at the same horizon
-    obs_v = F.when(is_obs, F.col("__v"))
-    u = u.withColumn(
-        leadname, F.when(is_obs, F.first(obs_v, ignorenulls=True).over(w_next))
-    )
+    u = u.withColumn("__obs_v", F.when(is_obs, F.col("__v")))
+    u = u.withColumn(leadname, F.when(is_obs, next_non_null("__obs_v").over(w_ord)))
     gap_col = ts_diff_us("__ts", "__prev_ts")
     brk = F.when(is_obs & gap_col.isNotNull() & (gap_col > gap_us), 1).otherwise(0)
     u = u.withColumn("__brk", brk)
@@ -320,9 +321,8 @@ def incremental_fill(
         ).over(w_cum),
         carried_start,
     )
-    next_brk = F.first(
-        F.when(is_obs & (F.col("__brk") == 1), F.col("__gidx")), ignorenulls=True
-    ).over(w_next)
+    u = u.withColumn("__brk_gidx", F.when(F.col("__brk") == 1, F.col("__gidx")))
+    next_brk = next_non_null("__brk_gidx").over(w_ord)
     total_obs = F.max("__gidx").over(w_all)
     u = u.withColumn(
         "session_len",

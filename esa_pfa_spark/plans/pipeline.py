@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from esa_pfa_spark.operators.asof import asof_join
 from esa_pfa_spark.operators.features import token_stats_arrow
-from esa_pfa_spark.operators.windows import lag_lead, sessionize
+from esa_pfa_spark.operators.windows import lag_lead, next_non_null, sessionize
 
 DEFAULT_TOLERANCE = _dt.timedelta(days=7)
 DEFAULT_SESSION_GAP = _dt.timedelta(days=7)
@@ -111,16 +111,23 @@ def feature_table_fused(
 
       * token stats: Arrow UDF post-exchange (full shuffle-width
         parallelism; probe rows carry null tokens and cost nothing);
-      * lag/lead over observations only: ``last/first(val, ignorenulls)``
-        over (unbounded, -1) / (+1, unbounded) frames — probe rows are
-        null so they are skipped exactly like lag/lead over the obs-only
-        stream;
+      * lag/lead over observations only: ``last(val, ignorenulls)`` over
+        the (unbounded, -1) frame and ``lead(val, 1) IGNORE NULLS`` (a
+        linear streaming offset frame) — probe rows are null so they are
+        skipped exactly like lag/lead over the obs-only stream;
       * sessionization: gap from the previous OBSERVATION row
         (ignorenulls fill of obs-ts), break-cumsum over obs rows only;
       * as-of fill: last(payload struct, ignorenulls) as in asof_join.
 
-    Physical shape: 1 Exchange + 2 in-partition Sorts (the second for the
-    per-session count) + 1 ArrowEval.  Output == feature_table (tested).
+    Every frame is linear per entity: cumulative frames for the backward
+    fills, ``lead IGNORE NULLS`` for the forward ones (``lead_1_mean`` and
+    the session end behind ``session_len``), so one hot entity costs O(n)
+    rather than the O(n^2) of a ``(1, unboundedFollowing)`` frame.
+
+    Physical shape: 1 Exchange + 1 in-partition Sort (every window shares
+    the ``(entity_id, __ts, __tag)`` order; ``session_len`` is bracketed
+    arithmetically, not by a per-session window) + 1 ArrowEval.  Output ==
+    feature_table (tested).
 
     The full ``tokens`` array rides the exchange + window sorts here; see
     ``feature_table_slim`` for the narrow-shuffle variant that fetches
@@ -236,7 +243,13 @@ def _fused_fill(u: DataFrame, tolerance, payload: list[str]) -> DataFrame:
     (obs rows ``__tag=0`` carrying ``mean`` + the payload columns, probe
     rows ``__tag=1`` with nulls): computes lag/lead/session features and
     the backward tolerance-bounded as-of fill, returns one row per probe
-    with ``matched_ts`` + ``payload``."""
+    with ``matched_ts`` + ``payload``.
+
+    All windows share the ``(entity_id, __ts, __tag)`` order spec, hence
+    one Sort.  The forward lookups (``lead_1_mean`` and ``next_brk``, the
+    next session's first observation index) are ``lead(x, 1) IGNORE
+    NULLS`` over helper columns: a streaming offset frame, linear per
+    entity.  The whole-partition ``w_all`` frame is a single aggregate."""
     gap_us = int(DEFAULT_SESSION_GAP.total_seconds() * 1e6)
     tol_us = int(
         (tolerance.total_seconds() if hasattr(tolerance, "total_seconds") else float(tolerance))
@@ -250,22 +263,21 @@ def _fused_fill(u: DataFrame, tolerance, payload: list[str]) -> DataFrame:
     w_prev = Window.partitionBy("entity_id").orderBy(*order).rowsBetween(
         Window.unboundedPreceding, -1
     )
-    w_next = Window.partitionBy("entity_id").orderBy(*order).rowsBetween(
-        1, Window.unboundedFollowing
-    )
+    w_ord = Window.partitionBy("entity_id").orderBy(*order)
     w_cum = Window.partitionBy("entity_id").orderBy(*order).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
 
     is_obs = F.col("__tag") == 0
     obs_ts = F.when(is_obs, F.col("__ts"))
-    obs_mean = F.when(is_obs, F.col("mean"))
+    u = u.withColumn("__obs_mean", F.when(is_obs, F.col("mean")))
     u = u.withColumn("__prev_obs_ts", F.last(obs_ts, ignorenulls=True).over(w_prev))
     u = u.withColumn(
-        "lag_1_mean", F.when(is_obs, F.last(obs_mean, ignorenulls=True).over(w_prev))
+        "lag_1_mean",
+        F.when(is_obs, F.last("__obs_mean", ignorenulls=True).over(w_prev)),
     )
     u = u.withColumn(
-        "lead_1_mean", F.when(is_obs, F.first(obs_mean, ignorenulls=True).over(w_next))
+        "lead_1_mean", F.when(is_obs, next_non_null("__obs_mean").over(w_ord))
     )
     gap = ts_diff_us("__ts", "__prev_obs_ts")
     brk = F.when(is_obs & gap.isNotNull() & (gap > gap_us), 1).otherwise(0)
@@ -291,9 +303,8 @@ def _fused_fill(u: DataFrame, tolerance, payload: list[str]) -> DataFrame:
         F.when(is_obs & ((F.col("__brk") == 1) | (F.col("__oidx") == 1)), F.col("__oidx")),
         ignorenulls=True,
     ).over(w_cum)
-    next_brk = F.first(
-        F.when(is_obs & (F.col("__brk") == 1), F.col("__oidx")), ignorenulls=True
-    ).over(w_next)
+    u = u.withColumn("__brk_oidx", F.when(F.col("__brk") == 1, F.col("__oidx")))
+    next_brk = next_non_null("__brk_oidx").over(w_ord)
     total_obs = F.max("__oidx").over(w_all)
     u = u.withColumn(
         "session_len",

@@ -133,6 +133,66 @@ def test_slim_pipeline_narrow_shuffle(spark):
     assert len(ent_ex) == 1, "window fill must keep exactly one entity_id exchange"
 
 
+_FRAME = re.compile(r"specifiedwindowframe\((\w+), ([^,()]+(?:\(\))?), ([^,()]+(?:\(\))?)\)")
+
+
+def test_forward_fills_use_no_suffix_frames(spark):
+    """Every forward fill is a linear ``lead(x, 1) IGNORE NULLS`` offset
+    frame: no plan may carry a frame running to ``unboundedfollowing``
+    from any lower bound but ``unboundedpreceding``.  Such a suffix frame
+    re-aggregates the rest of the partition for every row — quadratic in
+    a hot entity.  The whole-partition frame (one aggregate) is fine.  The
+    fused plan keeps one Exchange and one Sort."""
+    import datetime as dt
+
+    from pyspark.sql import functions as F
+
+    from esa_pfa_spark import synth
+    from esa_pfa_spark.operators import windows as W
+    from esa_pfa_spark.operators.asof import asof_join
+    from esa_pfa_spark.plans.incremental import incremental_fill
+    from esa_pfa_spark.plans.pipeline import feature_table_fused, feature_table_slim
+
+    obs = synth.observations_df(spark, seed=42, n_entities=10, mean_obs=5, mean_tok=8)
+    probes = synth.queries_df(spark, seed=42, n_entities=10, mean_obs=5)
+    narrow = obs.select("entity_id", "ts", "n_tok")
+    state = spark.createDataFrame(
+        [("e00001", dt.datetime(2020, 1, 1), 1.0, 3, 1, 2)],
+        "entity_id string, last_ts timestamp, last_value double, "
+        "obs_before long, sessions_before long, last_sess_start long",
+    )
+    sparse = narrow.select(
+        "entity_id", "ts", F.when(F.col("n_tok") > 3, F.col("n_tok")).alias("v")
+    )
+    plans = {
+        name: df._jdf.queryExecution().executedPlan().toString()
+        for name, df in {
+            "fused": feature_table_fused(obs, probes),
+            "slim": feature_table_slim(obs, probes),
+            "incremental": incremental_fill(
+                obs.withColumn("mean", F.lit(1.0)), probes, state, value_col="mean"
+            ),
+            "asof_forward": asof_join(probes, narrow, direction="forward"),
+            "asof_nearest": asof_join(probes, narrow, direction="nearest"),
+            "bfill": W.bfill(sparse, ["v"], "entity_id", "ts"),
+        }.items()
+    }
+    for name, plan in plans.items():
+        frames = _FRAME.findall(plan)
+        assert frames, f"{name}: no window frame found (plan format changed?)\n{plan}"
+        suffix = [
+            f for f in frames
+            if f[2] == "unboundedfollowing$()" and f[1] != "unboundedpreceding$()"
+        ]
+        assert not suffix, f"{name}: quadratic suffix frame {suffix}:\n{plan}"
+        assert any(f[1:] == ("1", "1") for f in frames), (
+            f"{name}: expected a lead offset frame:\n{plan}"
+        )
+    fused = plans["fused"]
+    assert n_exchanges(fused) == 1, fused
+    assert len(re.findall(r"(?<![A-Za-z])Sort \[", fused)) == 1, fused
+
+
 def test_enrichment_windows_share_exchange(spark):
     """lag/lead + sessionize + session_len over one repartition: the window
     specs on (entity_id) and (entity_id, session_id) must both be satisfied

@@ -50,6 +50,18 @@ class TestPackAttentionStats:
             )
             assert r["total_pairs"] == r["n_tok"] * (r["n_tok"] + 1) // 2
 
+    def test_pair_counts_exact_beyond_double_precision(self, spark):
+        # one window of T ~ 2e8 tokens: T(T+1) > 2^53, where a double
+        # quotient can no longer represent every integer pair count
+        a, b = 100_000_001, 100_000_001
+        df = _tok_df(spark, [("s", 1, a), ("s", 2, b)])
+        row = pack_attention_stats(df, capacity=2**53 // 2 + 1).collect()
+        assert len(row) == 1
+        t = a + b
+        assert t * (t + 1) > 2**53
+        assert row[0]["total_pairs"] == t * (t + 1) // 2
+        assert row[0]["cross_pairs"] == t * (t + 1) // 2 - a * (a + 1) // 2 - b * (b + 1) // 2
+
 
 class TestKneserNey:
     def test_hand_computed_tiny_corpus(self, spark):

@@ -181,3 +181,35 @@ def test_empty_and_single_token_corpora(spark):
     one = _df(spark, {1: [7]})
     rows = suffix_order(one).collect()
     assert [(r["doc_id"], r["off"], r["sa_idx"]) for r in rows] == [(1, 0, 0)]
+
+
+def test_empty_document_in_corpus(spark, tmp_path, capsys):
+    """A zero-token document has no suffixes and must not abort the
+    suffix-array build (sequence(1, 0) counts down to the invalid index
+    0); it reports n_tok = dup_tokens = 0 and dup_frac = 0."""
+    from esa_pfa_spark import cli
+    from esa_pfa_spark.operators.suffix import duplicate_coverage
+
+    docs = {1: [5, 6, 7, 8, 5, 6], 2: [], 3: [5, 6, 7, 9]}
+    df = _df(spark, docs)
+    sa = suffix_order(df).orderBy("sa_idx").collect()
+    assert [(r["doc_id"], r["off"]) for r in sa] == _ref_order(docs)
+    assert [r["sa_idx"] for r in sa] == list(range(len(sa)))
+
+    want_len, want_fp = _ref_longest_dup(docs)
+    r = longest_duplicate_span(df).collect()[0]
+    assert (r["dup_len"], r["span_fp"]) == (want_len, want_fp)
+
+    want = TestDuplicateCoverage()._ref_coverage(docs, 3)
+    cov = {r["doc_id"]: r for r in duplicate_coverage(df, min_len=3).collect()}
+    assert {d: r["dup_tokens"] for d, r in cov.items()} == want
+    assert (cov[2]["n_tok"], cov[2]["dup_frac"]) == (0, 0.0)
+    assert cov[1]["dup_frac"] == round(want[1] / 6, 6)
+
+    src, out = tmp_path / "docs", tmp_path / "cov"
+    df.write.parquet(str(src))
+    cli.main(["dedup-exact", "--input", str(src), "--out", str(out),
+              "--min-len", "3"])
+    written = {r.doc_id: r for r in spark.read.parquet(str(out)).collect()}
+    assert (written[2].n_tok, written[2].dup_tokens, written[2].dup_frac) == (0, 0, 0.0)
+    assert f"{sum(want.values())}/10 tokens" in capsys.readouterr().out
